@@ -19,7 +19,7 @@ F.xxhash64 in production where cross-engine parity is not required.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import words_col
@@ -222,15 +222,85 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
 # LSH bucket-skew cap: a bucket with m members yields m(m-1)/2 candidate
 # pairs, so one duplicate-heavy mega-bucket (every member shares a band
 # key) can turn a single task into an hours-long straggler. Buckets are
-# deterministically truncated to this many members (rank by id within the
-# bucket; the SAME members survive in every band, so a capped cluster
-# still pairs its first `cap` members with each other). Dropped mass is
-# LOGGED, never silent. Exact-duplicate mega-clusters should be removed by
+# deterministically truncated to this many members (the smallest ids; the
+# SAME members survive in every band, so a capped cluster still pairs its
+# first `cap` members with each other). Dropped mass is LOGGED, never
+# silent. Exact-duplicate mega-clusters should be removed by
 # exact_duplicates() upstream (pipeline/recipes.py does) — the cap is the
 # backstop for near-dup-heavy corpora.
 LSH_BUCKET_CAP = 4096
 
 _log = __import__("logging").getLogger(__name__)
+
+
+def _cap_per_key(rows: DataFrame, key: str, order: str, cap: int | None,
+                 what: str, unit: str = "bucket", log=_log) -> DataFrame:
+    """`rows` with at most `cap` rows per `key` value — those with the
+    `cap` smallest `order` values — the exact number dropped logged once
+    on `log`. The one skew cap of every operator that pairs the members
+    of a bucket (MinHash and SimHash band buckets, shared-window buckets,
+    the corpus side of dedup_against_index, semantic_dedup clusters).
+    Callers aggregate or join only the capped rows, so no bucket array or
+    join key ever holds more than `cap` members.
+
+    One hash groupBy(key).count() is the gate: an all-under-cap input
+    pays that one aggregate job and gets `rows` back as-is. Only when
+    some key is over the cap does a row_number window rank the rows; the
+    dropped count is the over-cap keys' summed excess, and the kept rows
+    are localCheckpoint-ed (eager) so the ranking runs once. That
+    checkpoint's blocks are executor-local: outside local mode an
+    executor loss makes them unrecoverable (there is no lineage to
+    recompute them from). `rows` is read by the gate and again by the
+    caller's plan, so callers pass a persisted or checkpointed frame when
+    it is costly to recompute. `cap=None` returns `rows` unchanged."""
+    if cap is None:
+        return rows
+    over = rows.groupBy(key).count().where(F.col("count") > cap)
+    if not over.head(1):
+        return rows
+    n_dropped = over.agg(F.sum(F.col("count") - cap)).first()[0]
+    log.warning(
+        "%s: %d %s memberships beyond the %d-per-%s cap were dropped; "
+        "the smallest ids are kept (duplicate-heavy input: run exact "
+        "dedup upstream)", what, n_dropped, unit, cap, unit)
+    rn = F.row_number().over(Window.partitionBy(key).orderBy(order))
+    return (rows.withColumn("__rn", rn).where(F.col("__rn") <= cap)
+            .drop("__rn").localCheckpoint(eager=True))
+
+
+def _bucket_pairs(rows: DataFrame, key: str, cap: int | None, what: str,
+                  carry: str | None = None) -> DataFrame:
+    """Candidate pairs of the documents that share a `key` bucket of
+    `rows` (columns id, key[, carry]): (id_a, id_b) with id_a < id_b,
+    plus <carry>_a / <carry>_b when a per-document `carry` column rides
+    along, each pair once however many buckets it shares.
+
+    Pairs are enumerated INSIDE each bucket's member array (guide §2.4,
+    remove shuffles outright): one aggregate groups the capped members on
+    the key a band self-join would have shuffled on, so the quadratic
+    term stays bucket-local and no join reads the memberships twice.
+    Only (id, key[, carry]) ever shuffles — never the shingle or window
+    arrays, the dominant payload at corpus scale, which callers re-join
+    by id for candidates only. The buckets are localCheckpoint-ed
+    (eager; _cap_per_key's executor-local caveat applies), so the
+    result's own plan starts from materialized buckets and re-running a
+    kept result does not redo the aggregate."""
+    rows = _cap_per_key(rows, key, "id", cap, what)
+    member = F.struct("id", carry) if carry else F.col("id")
+
+    def mid(c: Column) -> Column:
+        return c["id"] if carry else c
+
+    a, b = F.col("a"), F.col("b")
+    out = [mid(a).alias("id_a"), mid(b).alias("id_b")]
+    if carry:
+        out += [a[carry].alias(f"{carry}_a"), b[carry].alias(f"{carry}_b")]
+    buckets = (rows.groupBy(key).agg(F.collect_list(member).alias("ms"))
+               .localCheckpoint(eager=True))
+    return (buckets.select(F.explode("ms").alias("a"), "ms")
+            .select("a", F.explode(F.filter("ms", lambda m: mid(m) > mid(a)))
+                    .alias("b"))
+            .select(*out).distinct())
 
 
 def _fused_band_keys() -> Column:
@@ -253,67 +323,26 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float, text_col: str = "text",
     """Banded-LSH near-duplicate pairs with exact-Jaccard verification.
 
     Plan shape at scale: one scan computes signatures; explode to b rows per
-    doc; ONE shuffle groups each band bucket's member ids; candidate
+    doc; after the cap's count gate (_cap_per_key), ONE shuffle groups
+    each band bucket's capped member ids; candidate
     pairs are enumerated bucket-locally (no self-join), so the quadratic
     blow-up is confined to individual buckets (skew-bounded by band
     width plus the `bucket_cap` truncation; pass None to disable). No
     all-pairs join ever materializes.
     """
-    # Materialize the signature table ONCE: it feeds both sides of the
-    # band self-join and both shingle-map joins, and without a persist
+    # Materialize the signature table ONCE: it feeds the cap gate, the
+    # band buckets and both shingle-map joins, and without a persist
     # Spark recomputes the md5+rehash scan (the hot loop) for each — up to
     # 4x the work, serialized through broadcast builds. Persisting the
     # (id, shingles, sig) table is the standard LSH-pipeline shape at any
     # scale (at 100 TB this is an intermediate table on disk; here
-    # MEMORY_AND_DISK). Blocks are dropped by the ContextCleaner when the
-    # frame goes out of scope.
+    # MEMORY_AND_DISK); the cap gate's aggregate materializes it.
     from pyspark import StorageLevel
     sig = minhash_signature(df, text_col, id_col) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    # one FUSED long bucket key per band: xxhash64 over (band index, the
-    # band's signature rows). A single 8-byte shuffle key instead of an
-    # (int, string) pair — the same change measured 4.5x on the SimHash
-    # membership self-join (BASELINE.md round 7). A 64-bit bucket
-    # collision can only ADD a candidate pair, and every candidate is
-    # verified by exact Jaccard below, so correctness is unaffected.
-    bands = _fused_band_keys()
-    # Candidate generation is bucket-LOCAL pair enumeration (r12; guide
-    # §2.4 "remove shuffles outright"): ONE aggregate groups each band
-    # bucket's sorted member ids (the groupBy shuffle — on the same key
-    # the old self-join shuffled on — materializes sig's cache as a side
-    # effect), and pairs are enumerated inside each bucket row. The old
-    # shape paid a separate cap-GATE aggregate job plus a band
-    # self-join with two exchange reads; this pays the one aggregate,
-    # reads the checkpointed buckets locally, and reports the exact
-    # dropped mass every run from the tiny aggregate instead of only
-    # when the gate tripped. Only (id, bucket) ever shuffles — never the
-    # shingle arrays (at corpus scale the shingles are the dominant
-    # payload; the verify step re-joins them by id for candidates only).
-    exploded = sig.select("id", F.explode(bands).alias("bk"))
-    agg = (exploded.groupBy("bk")
-           .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-           .localCheckpoint(eager=True))
-    members = F.col("ids")
-    if bucket_cap is not None:
-        n_dropped = agg.select(
-            F.sum(F.greatest(F.size("ids") - bucket_cap, F.lit(0)))
-        ).first()[0] or 0
-        if n_dropped:
-            _log.warning(
-                "minhash_lsh_pairs: %d (doc, band) bucket memberships "
-                "beyond the %d-per-bucket cap were dropped (duplicate-"
-                "heavy corpus; run exact dedup upstream to remove "
-                "identical-text mega-clusters)", n_dropped, bucket_cap)
-        # slice keeps the bucket's smallest `cap` ids — exactly the
-        # members the old rank-by-id window kept
-        members = F.slice("ids", 1, bucket_cap)
-    cand = (
-        agg.select(F.explode(members).alias("id_a"), members.alias("ids"))
-        .select("id_a",
-                F.explode(F.filter("ids", lambda x: x > F.col("id_a")))
-                .alias("id_b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(
+        sig.select("id", F.explode(_fused_band_keys()).alias("bk")),
+        "bk", bucket_cap, "minhash_lsh_pairs")
     sh_map = sig.select("id", "sh")
     cand = (
         cand.join(sh_map.select(F.col("id").alias("id_a"),
@@ -366,7 +395,7 @@ def dedup_against_index(new_df: DataFrame, index: DataFrame,
     shingle arrays are fetched by id-equi-join for candidates ONLY.
     `bucket_cap` bounds the INDEX side of each band bucket (boilerplate
     mega-buckets live in the corpus) with the standard exact
-    dropped-mass log."""
+    dropped-mass log (_cap_per_key)."""
     from pyspark import StorageLevel
     sig = minhash_signature(new_df, text_col, id_col) \
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -376,37 +405,15 @@ def dedup_against_index(new_df: DataFrame, index: DataFrame,
     sig.count()
     nb = sig.select(F.col("id").alias("new_id"),
                     F.explode(_fused_band_keys()).alias("bk"))
+    # the corpus band memberships feed the cap gate and the band join:
+    # checkpoint them so the corpus signature pass — the recurring
+    # per-batch cost — runs once per batch (same executor-local caveat as
+    # _cap_per_key's checkpoint)
     ib = index.select(F.col("id").alias("corpus_id"),
-                      F.explode(_fused_band_keys()).alias("bk"))
-    if bucket_cap is not None:
-        # Cap via ONE aggregate pass over the index memberships (r11
-        # verdict #3: the old shape paid a full groupBy-count GATE job
-        # over the corpus index per batch — recomputing the corpus
-        # signatures — and then, when tripped, a window rank over ALL
-        # buckets). The per-bucket sorted id list sliced to `bucket_cap`
-        # keeps exactly the same members the rank-by-id window kept, the
-        # checkpoint materializes the corpus signature pass ONCE per
-        # batch (the recurring cost the r11 DIAG phase split flagged),
-        # and the dropped-mass log is computed from the tiny
-        # checkpointed aggregate instead of a second corpus pass. A
-        # mega-bucket materializes its membership as one array row
-        # (bounded in practice by the documented exact-dedup-upstream
-        # requirement; the old window path sorted the same rows).
-        agg = (ib.groupBy("bk")
-               .agg(F.sort_array(F.collect_list("corpus_id")).alias("ids"))
-               .localCheckpoint(eager=True))
-        n_dropped = agg.select(
-            F.sum(F.greatest(F.size("ids") - bucket_cap, F.lit(0)))
-        ).first()[0] or 0
-        if n_dropped:
-            _log.warning(
-                "dedup_against_index: %d (corpus doc, band) bucket "
-                "memberships beyond the %d-per-bucket cap were "
-                "dropped (boilerplate-heavy corpus index; run exact "
-                "dedup upstream)", n_dropped, bucket_cap)
-        ib = agg.select(
-            F.col("bk"),
-            F.explode(F.slice("ids", 1, bucket_cap)).alias("corpus_id"))
+                      F.explode(_fused_band_keys()).alias("bk")) \
+        .localCheckpoint(eager=True)
+    ib = _cap_per_key(ib, "bk", "corpus_id", bucket_cap,
+                      "dedup_against_index")
     cand = (nb.join(ib, "bk")
             .where(F.col("new_id") != F.col("corpus_id"))
             .select("new_id", "corpus_id").distinct())
@@ -482,10 +489,7 @@ def _band_keys_col(col: str = "simhash"):
     2^30 bucket values instead of 2^15 the expected spurious-candidate
     count drops by ~4 orders of magnitude (measured in BASELINE.md
     round-7: 69.8M -> ~40k candidates at 10^6 random docs), which is
-    what keeps candidate generation ~linear at warehouse corpus sizes.
-    Shared by the candidate join and the scale-study histogram
-    (tools/simhash_scale_study.py) so both always describe the scheme
-    actually in production."""
+    what keeps candidate generation ~linear at warehouse corpus sizes."""
     width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
 
@@ -514,8 +518,9 @@ def simhash_near_dup_pairs(df: DataFrame, max_distance: int = 3,
     C(6,3)=20 tables, each keyed on a 30-bit 3-block subset of the
     fingerprint — Manku et al. WWW'07): any pair within distance
     < SIMHASH_BANDS agrees on at least one table key, so candidates
-    come from ONE shuffle grouping each (band_idx, band_val) bucket,
-    with pairs enumerated bucket-locally — never all-pairs. The exact
+    come from ONE shuffle grouping each (band_idx, band_val) bucket's
+    capped members (after the cap's count gate), with pairs enumerated
+    bucket-locally — never all-pairs. The exact
     popcount check then filters candidates. `bucket_cap` truncates
     pathological band buckets exactly like minhash_lsh_pairs
     (deterministic smallest-ids-kept, dropped mass logged); pass None
@@ -523,60 +528,26 @@ def simhash_near_dup_pairs(df: DataFrame, max_distance: int = 3,
     """
     assert max_distance < SIMHASH_BANDS, "banding guarantees recall only " \
         "for distance < number of bands"
-    # With bucket-local pair enumeration (below) the fingerprint table
-    # has exactly ONE consumer — the bucket aggregate, which carries
-    # (id, simhash) through to the pairs — so the r7 materialization
-    # barrier (the old self-join read `exploded` twice) is gone.
-    sig = simhash(df, text_col, id_col)
-    bands = _band_keys_col()
+    # the fingerprint table feeds the cap gate and the bucket aggregate:
+    # persist it so the per-token charge aggregation runs once
+    from pyspark import StorageLevel
+    sig = simhash(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
     # table key and band value FUSED into one long (band_val is 30
     # bits, band_idx < 32): a single 8-byte join/shuffle key instead of
     # an (int, long) pair — measured 4.5x faster on the 20M-membership
     # self-join at 10^6 docs (narrower shuffle rows, scalar codegen
     # compare instead of a two-column key)
-    exploded = (sig.select("id", "simhash", F.explode(bands).alias("b"))
+    exploded = (sig.select("id", "simhash", F.explode(_band_keys_col())
+                           .alias("b"))
                 .select("id", "simhash",
                         F.shiftleft(F.col("b.band_val"), 5)
                         .bitwiseOR(F.col("b.band_idx")).alias("bk")))
-    # Bucket-local pair enumeration (r12, same restructure as
-    # minhash_lsh_pairs; guide §2.4): group each bucket's sorted
-    # (id, simhash) members in ONE aggregate — the same shuffle key the
-    # old self-join used — and enumerate pairs inside the bucket row,
-    # carrying the 8-byte fingerprints through. Replaces the cap-GATE
-    # aggregate job + band self-join; the dropped-mass log is exact and
-    # always-on from the tiny checkpointed aggregate. sort_array over
-    # structs orders by id (ids are unique within a bucket), so the cap
-    # keeps exactly the members the old rank-by-id window kept.
-    agg = (exploded.groupBy("bk")
-           .agg(F.sort_array(
-               F.collect_list(F.struct("id", "simhash"))).alias("ms"))
-           .localCheckpoint(eager=True))
-    members = F.col("ms")
-    if bucket_cap is not None:
-        n_dropped = agg.select(
-            F.sum(F.greatest(F.size("ms") - bucket_cap, F.lit(0)))
-        ).first()[0] or 0
-        if n_dropped:
-            _log.warning(
-                "simhash_near_dup_pairs: %d (doc, band) bucket "
-                "memberships beyond the %d-per-bucket cap were "
-                "dropped (duplicate-heavy corpus; run exact dedup "
-                "upstream)", n_dropped, bucket_cap)
-        members = F.slice("ms", 1, bucket_cap)
-    cand = (
-        agg.select(F.explode(members).alias("a"), members.alias("ms"))
-        .select(F.col("a.id").alias("id_a"),
-                F.col("a.simhash").alias("sh_a"),
-                F.explode(F.filter(
-                    "ms", lambda m: m["id"] > F.col("a.id"))).alias("b"))
-        .select("id_a", "sh_a", F.col("b.id").alias("id_b"),
-                F.col("b.simhash").alias("sh_b"))
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    cand = _bucket_pairs(exploded, "bk", bucket_cap,
+                         "simhash_near_dup_pairs", carry="simhash")
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (cand.select("id_a", "id_b",
-                        F.col("sh_a").alias("sig_a"),
-                        F.col("sh_b").alias("sig_b"),
+                        F.col("simhash_a").alias("sig_a"),
+                        F.col("simhash_b").alias("sig_b"),
                         hamming.alias("hamming"))
             .where(F.col("hamming") <= max_distance))
 
@@ -630,52 +601,24 @@ def shared_window_pairs(df: DataFrame, k: int = WINDOW_TOKENS,
 
     Scale shape (same skeleton as minhash_lsh_pairs): one scan builds the
     distinct window set per doc; candidates come from ONE shuffle that
-    groups each 64-bit window-hash bucket, with pairs enumerated
-    bucket-locally (boilerplate mega-buckets are capped with the exact
-    dropped mass logged); counts are then verified
-    EXACTLY via array_intersect on the per-doc window arrays re-joined by
-    id — a hash collision can only add a candidate, never corrupt a
-    count. No all-pairs join ever materializes.
+    groups each 64-bit window-hash bucket's capped members (after the
+    cap's count gate), with pairs enumerated bucket-locally
+    (boilerplate mega-buckets are capped with the exact dropped mass
+    logged; pairs among dropped members are not reported); counts are
+    then verified EXACTLY via array_intersect on the per-doc window
+    arrays re-joined by id — a hash collision can only add a candidate,
+    never corrupt a count. No all-pairs join ever materializes.
     """
     from pyspark import StorageLevel
-    # Materialize the per-doc window table ONCE: it feeds the candidate
-    # join and both exact-verify sides. Same lifecycle as minhash's `sig`
-    # above: blocks are dropped by the ContextCleaner when the frame goes
-    # out of scope (the caller holds no handle), so repeated calls don't
-    # pin memory beyond the session's next GC cycle.
+    # Materialize the per-doc window table ONCE: it feeds the cap gate,
+    # the window buckets and both exact-verify sides (minhash's `sig`
+    # policy).
     w = df.select(F.col(id_col).alias("id"),
                   shingles_col(F.col(text_col), n=k).alias("wins")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    # Bucket-local pair enumeration (r12, same restructure as
-    # minhash_lsh_pairs; guide §2.4): one aggregate pass groups each
-    # window-hash bucket's sorted member ids — materializing w's cache
-    # as a side effect — and candidate pairs are enumerated inside each
-    # bucket row. Replaces the old cap-GATE aggregate job + band
-    # self-join; the dropped-mass log is exact and always-on, computed
-    # from the tiny checkpointed aggregate.
     ex = w.select("id", F.explode("wins").alias("win")) \
         .select("id", F.xxhash64("win").alias("wh"))
-    agg = (ex.groupBy("wh")
-           .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-           .localCheckpoint(eager=True))
-    members = F.col("ids")
-    if bucket_cap is not None:
-        n_dropped = agg.select(
-            F.sum(F.greatest(F.size("ids") - bucket_cap, F.lit(0)))
-        ).first()[0] or 0
-        if n_dropped:
-            _log.warning(
-                "shared_window_pairs: %d window memberships beyond "
-                "the %d-doc bucket cap were dropped (boilerplate "
-                "windows); pairs among dropped members are NOT "
-                "reported", n_dropped, bucket_cap)
-        members = F.slice("ids", 1, bucket_cap)
-    cand = (
-        agg.select(F.explode(members).alias("id_a"), members.alias("ids"))
-        .select("id_a",
-                F.explode(F.filter("ids", lambda x: x > F.col("id_a")))
-                .alias("id_b"))
-        .distinct())
+    cand = _bucket_pairs(ex, "wh", bucket_cap, "shared_window_pairs")
     wa = w.select(F.col("id").alias("id_a"), F.col("wins").alias("wa"))
     wb = w.select(F.col("id").alias("id_b"), F.col("wins").alias("wb"))
     return (cand.join(wa, "id_a").join(wb, "id_b")

@@ -26,6 +26,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _cap_per_key
+
 _log = logging.getLogger(__name__)
 
 
@@ -431,9 +433,9 @@ def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int,
             .select("query_id", "rank", "neighbor_id", "cosine"))
 
 
-# per-cluster suppressor cap for semantic_dedup — same policy family as
-# dedup.LSH_BUCKET_CAP / SIMHASH block caps / shared-window caps: every
-# candidate generator bounds its per-bucket quadratic term
+# per-cluster suppressor cap for semantic_dedup, enforced by the same
+# dedup._cap_per_key as the LSH, SimHash and shared-window bucket caps:
+# every candidate generator bounds its per-bucket quadratic term
 SEM_CLUSTER_CAP = 4096
 
 
@@ -496,35 +498,10 @@ def semantic_dedup(df: DataFrame, threshold: float,
     # output spine; freed by the ContextCleaner when the plan is dropped
     # (minhash_lsh_pairs policy)
     a = _assign(v, cent, 1).persist()
-    x_src = a
-    if cluster_cap is not None:
-        # cap gate (minhash_lsh_pairs shape): one exact aggregate —
-        # which also materializes a's persist — finds over-cap clusters;
-        # the rank-and-truncate window runs ONLY when one exists, so the
-        # common case pays a count-shuffle, not a window sort
-        big = (a.groupBy("cluster").count()
-               .where(F.col("count") > cluster_cap))
-        if big.head(1):
-            from pyspark import StorageLevel
-            w = Window.partitionBy("cluster").orderBy("id")
-            ranked = a.withColumn("__rn", F.row_number().over(w)) \
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            n_dropped = ranked.where(F.col("__rn") > cluster_cap).count()
-            if n_dropped:
-                _log.warning(
-                    "semantic_dedup: %d cluster memberships beyond the "
-                    "%d-per-cluster cap excluded from the suppressor "
-                    "side (degenerate k-means cluster; raise nlist to "
-                    "keep cluster sizes bounded). Within-cap rows are "
-                    "exact; only beyond-cap rows can miss beyond-cap "
-                    "suppressors.", n_dropped, cluster_cap)
-            # eager checkpoint of the capped table, release the ranked
-            # cache (round-5 ADVICE: no pinned blocks across calls)
-            x_src = ranked.where(F.col("__rn") <= cluster_cap) \
-                .drop("__rn").localCheckpoint(eager=True)
-            ranked.unpersist()
-    x = x_src.select(F.col("id").alias("id_x"), F.col("v").alias("vx"),
-                     "cluster")
+    # the cap gate's aggregate also materializes a's persist
+    x = _cap_per_key(a, "cluster", "id", cluster_cap, "semantic_dedup",
+                     unit="cluster", log=_log) \
+        .select(F.col("id").alias("id_x"), F.col("v").alias("vx"), "cluster")
     y = a.select(F.col("id").alias("id_y"), F.col("v").alias("vy"),
                  "cluster")
     best = (x.join(y, on="cluster")

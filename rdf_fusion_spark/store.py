@@ -207,6 +207,9 @@ class GraphStore:
         # pass at load time is the intended bulk-load semantics anyway
         # (the store then serves parsed structs, and later edits to the
         # source file no longer leak into an already-loaded store).
+        # localCheckpoint blocks are executor-local and carry no lineage:
+        # outside local mode an executor loss makes the loaded store
+        # unrecoverable, and the whole parse is materialized at load.
         return cls(spark, read_rdf(spark, path, fmt, base)
                    .localCheckpoint(eager=True))
 

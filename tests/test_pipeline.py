@@ -1,7 +1,9 @@
 """Unit tests for the LLM-data-pipeline operators (dedup, similarity,
 text analysis, multimodal plumbing) on tiny in-memory data."""
 
+import contextlib
 import math
+from typing import NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
@@ -338,6 +340,106 @@ def test_simhash_bucket_cap_bounds_mega_bucket(spark, caplog):
     ids = {i for r in pairs.collect() for i in (r["id_a"], r["id_b"])}
     assert ids == set(range(cap))
     assert any("cap were dropped" in m for m in caplog.messages)
+
+
+class _PlanNode(NamedTuple):
+    name: str
+    desc: str
+    rows: int | None          # "number of output rows"; None if no metric
+    children: list
+
+
+@contextlib.contextmanager
+def _executed_plans(spark):
+    """Physical plan graphs of every SQL execution started inside the
+    block — eager build jobs (gates, localCheckpoints) as well as the
+    final action — read from Spark's SQL status store on exit. Yields a
+    list that then holds one {node_id: _PlanNode} per execution."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def last_id():
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() \
+            if n else -1
+
+    bus.waitUntilEmpty()
+    first = last_id() + 1
+    plans = []
+    yield plans
+    bus.waitUntilEmpty()
+    for e in seq(store.executionsList()):
+        eid = e.executionId()
+        if eid < first:
+            continue
+        graph, values = store.planGraph(eid), store.executionMetrics(eid)
+        nodes = {}
+        for n in seq(graph.allNodes()):
+            rows = None
+            for m in seq(n.metrics()):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    rows = int(v.get().replace(",", ""))
+            nodes[n.id()] = _PlanNode(n.name(), n.desc(), rows, [])
+        for edge in seq(graph.edges()):
+            nodes[edge.toId()].children.append(edge.fromId())
+        plans.append(nodes)
+
+
+def _input_rows(plan: dict, node_id) -> int:
+    """Rows entering a node: the row metric of its nearest descendant
+    that has one (Project and similar nodes carry no row metric)."""
+    (child,) = plan[node_id].children
+    rows = plan[child].rows
+    return rows if rows is not None else _input_rows(plan, child)
+
+
+_DUP_TEXT = ("the exact same text repeated in every single copy of this "
+             "document corpus")
+
+
+@pytest.mark.parametrize("site", ["minhash_lsh_pairs", "dedup_against_index",
+                                  "simhash_near_dup_pairs",
+                                  "shared_window_pairs"])
+def test_bucket_cap_bounds_rows_entering_collect(spark, site):
+    """The cap bounds MEMORY, not just candidate pairs: on 5k identical
+    docs (every bucket is one 5k-member mega-bucket) at most `cap` rows
+    per bucket key enter any collect_list aggregate the operator runs,
+    eager build jobs included, so no bucket array ever holds the
+    uncapped membership. Read from the executed plans' SQL metrics."""
+    n, cap = 5_000, 16
+    dup = spark.range(0, n).select(F.col("id").alias("doc_id"),
+                                   F.lit(_DUP_TEXT).alias("text"))
+    batch = spark.createDataFrame([(10 * n, _DUP_TEXT)],
+                                  "doc_id long, text string")
+    # site: (call, bucket keys per document, result rows)
+    pairs = cap * (cap - 1) // 2
+    call, keys, want = {
+        "minhash_lsh_pairs": (
+            lambda: dedup.minhash_lsh_pairs(dup, 0.9, bucket_cap=cap),
+            dedup.NUM_BANDS, pairs),
+        "dedup_against_index": (
+            lambda: dedup.dedup_against_index(
+                batch, dedup.minhash_index(dup), 0.9, bucket_cap=cap),
+            dedup.NUM_BANDS, cap),
+        "simhash_near_dup_pairs": (
+            lambda: dedup.simhash_near_dup_pairs(dup, bucket_cap=cap),
+            len(dedup._block_combos()), pairs),
+        "shared_window_pairs": (
+            lambda: dedup.shared_window_pairs(dup, bucket_cap=cap),
+            len(_DUP_TEXT.split()) - dedup.WINDOW_TOKENS + 1, pairs),
+    }[site]
+    with _executed_plans(spark) as plans:
+        assert call().count() == want
+    collect_inputs = [_input_rows(p, i) for p in plans
+                      for i, node in p.items()
+                      if "collect_list(" in node.desc]
+    # dedup_against_index joins its capped index rows directly
+    assert bool(collect_inputs) == (site != "dedup_against_index")
+    assert all(r <= cap * keys for r in collect_inputs), collect_inputs
 
 
 def test_simhash_banding_recall_within_distance(spark):
@@ -686,9 +788,7 @@ def test_semantic_dedup_cluster_cap_mega_cluster(spark, caplog):
                in r.message for r in caplog.records)
 
 
-def test_semantic_dedup_cap_gate_skips_window_when_under_cap(spark):
-    """Under-cap corpora must take the cheap gate path (no rank window,
-    no checkpoint) and return exactly the uncapped result."""
+def _under_cap_semantic(spark, cap):
     import random
     rng = random.Random(11)
     vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)]
@@ -696,13 +796,41 @@ def test_semantic_dedup_cap_gate_skips_window_when_under_cap(spark):
         [(i, [float(x) for x in v]) for i, v in vecs],
         "vec_id long, embedding array<double>")
     cent = similarity.kmeans_centroids(df, nlist=4, iters=2)
-    capped = {r.vec_id: (r.cluster, r.max_lower_sim, r.keep)
-              for r in similarity.semantic_dedup(
-                  df, 0.5, centroids=cent, cluster_cap=4096).collect()}
-    uncapped = {r.vec_id: (r.cluster, r.max_lower_sim, r.keep)
-                for r in similarity.semantic_dedup(
-                    df, 0.5, centroids=cent, cluster_cap=None).collect()}
+    return {r.vec_id: (r.cluster, r.max_lower_sim, r.keep)
+            for r in similarity.semantic_dedup(
+                df, 0.5, centroids=cent, cluster_cap=cap).collect()}
+
+
+def _under_cap_minhash(spark, cap):
+    rows = [(0, "the quick brown fox jumps over the lazy dog"),
+            (1, "the quick brown fox jumps over the lazy cat"),
+            (2, "completely different words entirely here now"),
+            (3, "the quick brown fox jumps over the lazy dog")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return sorted(map(tuple, dedup.minhash_lsh_pairs(
+        df, 0.5, bucket_cap=cap).collect()))
+
+
+@pytest.mark.parametrize("run", [_under_cap_semantic, _under_cap_minhash],
+                         ids=["semantic_dedup", "minhash_lsh_pairs"])
+def test_semantic_dedup_cap_gate_skips_window_when_under_cap(spark, run):
+    """Under-cap corpora must take the cheap gate path — no rank window
+    beyond those of the uncapped call in any job the call runs, eager
+    build jobs included — and return exactly the uncapped result. A cap
+    of 1 is the control: it trips the gate, and the same observation
+    sees the extra window. Windows are counted by distinct plan text, as
+    a cached subtree shows up again in every job that reads it."""
+    def run_counting_windows(cap):
+        with _executed_plans(spark) as plans:
+            out = run(spark, cap)
+        return out, len({n.desc for p in plans for n in p.values()
+                         if n.name == "Window"})
+
+    capped, capped_windows = run_counting_windows(4096)
+    uncapped, uncapped_windows = run_counting_windows(None)
     assert capped == uncapped
+    assert capped_windows == uncapped_windows
+    assert run_counting_windows(1)[1] > uncapped_windows
 
 
 def test_semantic_dedup_cap_blind_spot_quantified(spark, caplog):

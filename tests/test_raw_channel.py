@@ -4,10 +4,13 @@ consumers bypass the 8-field struct and Catalyst prunes the struct
 build. These tests pin (a) the constructor invariant the whole channel
 rests on — the raw expression is NULL exactly when the term struct is
 NULL, and its value agrees with the struct field — including the NaN /
-±INF / negative edge values, (b) result equivalence of a computed-value
-aggregate pipeline against the struct-only evaluation (channels
-stripped), and (c) the plan effects: q3's group key is the native long
-and its pre-aggregate pipeline builds no term struct."""
+±INF / negative edge values, and the one place it does not hold (an
+int_term whose decimal channel overflows) together with the channel
+order that keeps nnval() and the COUNT fast path exact there, (b) the
+result of a computed-value aggregate pipeline (q3's shape) against a
+plain-SQL reference computed with DataFrame functions, and (c) the plan
+effects: q3's group key is the native long and its pre-aggregate
+pipeline builds no term struct."""
 
 import io
 import sys
@@ -65,10 +68,34 @@ def test_constructor_raw_invariants(spark):
                     assert same, f"{name}.{k}: value mismatch {tf!r} vs {r!r}"
 
 
-def _strip(col):
-    """A struct-only copy of a term column: same expression, channels and
-    static tag dropped — forces every consumer onto the generic path."""
-    return col.alias("__strip")
+def test_int_term_overflowing_d_channel_keeps_count_and_nnval(spark):
+    # int_term over a SUM beyond 1e20: the decimal(38,18) `_rf_d` cast
+    # overflows to NULL (non-ANSI cast semantics) while the term struct
+    # and `_rf_x` stay non-NULL. nnval() and the translator's COUNT fast
+    # path read the FIRST raw channel present, so both stay exact only
+    # while `_rf_x` is scanned before `_rf_d`; swapping the order fails
+    # this test.
+    from decimal import Decimal
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        df = spark.createDataFrame(
+            [(1, Decimal(10**24)), (1, Decimal(10**24)), (2, None),
+             (3, Decimal(5))], "g int, n decimal(38,0)")
+        sums = df.groupBy("g").agg(F.sum("n").alias("s"))
+        term = tv.int_term(F.col("s"))
+        first = next(iter(tv.raw_channels(term).values()))
+        rows = sums.select("g", term.isNotNull().alias("struct_nn"),
+                           tv.nnval(term).alias("nnval"),
+                           tv.dval(term).alias("d")).orderBy("g").collect()
+        # the hazard is live: group 1's decimal channel overflowed
+        assert rows[0]["struct_nn"] and rows[0]["d"] is None
+        assert [r["nnval"] for r in rows] == [r["struct_nn"] for r in rows]
+        counts = sums.agg(F.count(term).alias("struct"),
+                          F.count(first).alias("fast")).first()
+        assert counts["fast"] == counts["struct"] == 2
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_computed_aggregate_equivalence(spark):
